@@ -1,10 +1,10 @@
-"""Pins for the r15 catalog memoization (load_tables plan reuse).
+"""Pins for the catalog memoization (load_tables plan reuse).
 
 The memo must be invisible semantically: same plans served per
-(session, sf_dir, fingerprints), a rewrite under the same path is a
-MISS, and temp views are re-registered whenever the key changes or
-a view was dropped (the r15 fast path skips only when nothing could
-have changed).
+(session, sf_dir, table, fingerprint), a rewrite under the same path is
+a MISS for that table, and a temp view is re-registered whenever its
+key changes or it was dropped (the fast path skips only when nothing
+could have changed).
 """
 
 import shutil
@@ -55,12 +55,16 @@ def test_rewrite_under_same_path_is_a_miss(spark, tmp_path):
     os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     b = load_tables(spark, sf_dir, names=["nation"])
     assert b["nation"] is not a["nation"]
-    # the superseded entry was evicted (bounded cache)
+    # the superseded entry was replaced (bounded cache): one live entry
+    # per (session, sf_dir, table), holding the new fingerprint's plan
     app_id = spark.sparkContext.applicationId
     live = [
         k for k in catalog._TABLE_CACHE if k[:2] == (app_id, sf_dir)
     ]
-    assert len(live) == 1
+    assert live == [(app_id, sf_dir, "nation")]
+    fp, df = catalog._TABLE_CACHE[(app_id, sf_dir, "nation")]
+    assert df is b["nation"]
+    assert fp == (st.st_size, st.st_mtime_ns + 1_000_000)
 
 
 def test_sf_switch_repoints_views(spark):

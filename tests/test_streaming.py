@@ -286,3 +286,73 @@ def test_poll_cycle_rejects_value_format_flip_on_populated_sink(spark, tmp_path)
         )
     # same format keeps appending fine
     run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
+
+
+def test_interrupted_pointer_write_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """A crash between writing the new pointer and renaming it over
+    ``LATEST`` leaves the previous snapshot current and readable."""
+    import os
+
+    store = SnapshotStore(str(tmp_path / "snap"))
+    store.replace(spark.range(5).withColumnRenamed("id", "dvj_id"))
+
+    def crash(src, dst):
+        raise OSError("interrupted before the pointer rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError, match="interrupted"):
+            store.replace(spark.range(3).withColumnRenamed("id", "dvj_id"))
+    assert store.current_version() == 1
+    assert store.read(spark).count() == 5
+    # the next replace overwrites the abandoned version and pointer
+    store.replace(spark.range(2).withColumnRenamed("id", "dvj_id"))
+    assert store.current_version() == 2
+    assert store.read(spark).count() == 2
+
+
+def test_truncated_pointer_raises_instead_of_reemitting(spark, tmp_path):
+    """An unparsable ``LATEST`` must fail the cycle: reading it as "no
+    snapshot" would report every row as new."""
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    run_poll_cycle(spark, store, QueryParams(mode="NOW"))
+    with open(tmp_path / "snap" / "LATEST", "w"):
+        pass  # truncated, as a torn truncate-then-write leaves it
+    with pytest.raises(ValueError, match="unparsable snapshot pointer"):
+        store.current_version()
+    with pytest.raises(ValueError, match="unparsable snapshot pointer"):
+        run_poll_cycle(spark, store, QueryParams(mode="NOW"))
+
+
+def test_poll_cycle_treats_sink_without_data_as_first_cycle(spark, tmp_path):
+    """A sink directory an aborted first write left without data files
+    holds no schema to contradict: the cycle appends to it."""
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    sink = tmp_path / "sink"
+    sink.mkdir()
+    counts = run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=str(sink))
+    assert spark.read.parquet(str(sink)).count() == counts["total"] > 0
+
+
+def test_poll_cycle_raises_on_corrupt_populated_sink(spark, tmp_path):
+    """Only a sink without data counts as the first cycle: a corrupt
+    part file in a populated sink fails the cycle before it appends or
+    replaces the snapshot."""
+    import glob
+
+    load_tables(spark, SF_SMOKE)
+    store = SnapshotStore(str(tmp_path / "snap"))
+    sink = str(tmp_path / "sink")
+    run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
+    parts = glob.glob(f"{sink}/part-*.parquet")
+    assert parts
+    for path in parts:
+        with open(path, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception) as excinfo:
+        run_poll_cycle(spark, store, QueryParams(mode="NOW"), sink_dir=sink)
+    assert "sink schema mismatch" not in str(excinfo.value)
+    assert store.current_version() == 1
+    assert len(glob.glob(f"{sink}/part-*.parquet")) == len(parts)

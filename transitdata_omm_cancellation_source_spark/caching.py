@@ -20,6 +20,7 @@ hook turns "rely on LRU" into a deterministic release point.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
@@ -81,10 +82,19 @@ def clear_value_memos() -> int:
     return n
 
 
-def persist_tracked(df: DataFrame) -> DataFrame:
+def persist_tracked(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     """persist() + record the frame for a later bulk release."""
-    _TRACKED.append(df.persist())
+    _TRACKED.append(df.persist() if level is None else df.persist(level))
     return df
+
+
+def release_frame(df: DataFrame) -> None:
+    """Unpersist one tracked frame ahead of the bulk release."""
+    for i, tracked in enumerate(_TRACKED):
+        if tracked is df:
+            del _TRACKED[i]
+            break
+    df.unpersist()
 
 
 def release_tracked() -> int:

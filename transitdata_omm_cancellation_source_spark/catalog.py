@@ -16,6 +16,7 @@ microsecond.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,70 +51,50 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: (appId, sf_dir, names, source fingerprints) -> loaded DataFrames.
-#: Every registry ``build()`` calls ``load_tables``, and each
-#: ``spark.read.parquet`` costs ~70 ms of driver/py4j/footer work even
-#: warm (measured sf0.1: 10 tables ≈ 0.7 s per call — ~40% of the
-#: 110-query bench wall).  A DataFrame is an immutable lazy PLAN, so
-#: reusing the object changes nothing about what executes — this is
-#: catalog METADATA reuse (the same class of state as Spark's own
-#: filesourcePartitionFileCache), never result caching: every action
-#: still computes from the parquet inputs.  The key carries each
-#: source file's (size, mtime) fingerprint, so a table rewritten
-#: under the same path within a session is a cache MISS.
-_TABLE_CACHE: dict[tuple, dict[str, DataFrame]] = {}
+#: (appId, sf_dir, table) -> (source fingerprint, loaded DataFrame).
+#: ``spark.read.parquet`` costs ~70 ms of driver/py4j/footer work per
+#: table even warm, and every registry ``build()`` and every poll cycle
+#: calls ``load_tables``.  A DataFrame is an immutable lazy plan, so
+#: reusing the object is catalog metadata reuse, never result caching:
+#: every action still computes from the parquet inputs.  Each table
+#: carries its own source fingerprint, so a rewrite of one file re-reads
+#: that table alone, and the entry it supersedes is replaced in place
+#: (one live entry per session, sf_dir and table).
+_TABLE_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 
-def _source_fingerprints(sf_dir: str, names: tuple[str, ...]) -> tuple:
-    """(size, mtime_ns) per table source path — single-file parquet in
-    the testdata layout; a directory fingerprints by its own stat plus
-    entry count, which changes on any rewrite that adds/replaces
-    files.  Unstattable sources fingerprint as None (cache still keyed
-    by path)."""
-    fps = []
-    for name in names:
-        path = f"{sf_dir}/{name}.parquet"
-        try:
-            st = os.stat(path)
-            entry: tuple = (st.st_size, st.st_mtime_ns)
-            if os.path.isdir(path):
-                entry += (len(os.listdir(path)),)
-        except OSError:
-            entry = (None,)
-        fps.append(entry)
-    return tuple(fps)
+def _source_fingerprint(sf_dir: str, name: str) -> tuple:
+    """(size, mtime_ns) of a table's source path, from one ``stat``.
+
+    A directory source adds its entry count, which changes on any
+    rewrite that adds or replaces files.  An unstattable source
+    fingerprints as ``(None,)``: the table is then keyed by path alone.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (None,)
+    if stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns, len(os.listdir(path)))
+    return (st.st_size, st.st_mtime_ns)
 
 
-#: appId -> the cache key whose views were registered last.  Views are
-#: re-registered when this key changes (new sf_dir / table set /
-#: rewritten source — the ``spark.sql``-text builders MUST see the new
-#: relations) or when any view is missing (a caller dropped it).
-_VIEWS_REGISTERED: dict[str, tuple] = {}
+#: appId -> {base view name: (sf_dir, fingerprint) it was registered from}.
+_VIEWS_REGISTERED: dict[str, dict[str, tuple]] = {}
 
 
-def _views_current(spark: SparkSession, app_id: str, key: tuple) -> bool:
-    """True iff this exact key registered the views last AND all of
-    them still exist.  The existence probe goes straight to the
-    session catalog's temp-view registry (~0.4 ms/view) — a
-    ``createOrReplaceTempView`` costs ~8-13 ms of CreateViewCommand
-    analysis per view, which at 10 views x 110 query builds was ~13 s
-    of the sf0.1 bench."""
-    if _VIEWS_REGISTERED.get(app_id) != key:
-        return False
-    cat = spark._jsparkSession.sessionState().catalog()
-    return all(cat.getTempView(name).isDefined() for name in key[2])
+def view_key(spark: SparkSession, name: str) -> tuple | None:
+    """The (sf_dir, fingerprint) the base view ``name`` was last
+    registered from by ``load_tables`` in this session, or None.
 
-
-def views_key(spark: SparkSession) -> tuple | None:
-    """The cache key whose base views are currently registered for this
-    session (None before the first ``load_tables``).  Downstream
-    plan-object memos (the OMM view registration, the cancellation
-    pipeline frame) fold this into THEIR keys so an sf_dir switch or a
-    source rewrite — anything that re-points the base views — evicts
-    them in the same breath.  Carries the same shadowing contract as
-    ``_views_current``: a caller who shadows a view owns that name
-    until it drops it; the key cannot see shadows."""
-    return _VIEWS_REGISTERED.get(spark.sparkContext.applicationId)
+    Downstream memos (the OMM views, the cancellation journey side and
+    pipeline) fold this into their keys, so re-pointing a base view
+    (sf_dir switch, source rewrite) evicts exactly the plans built over
+    it.  A caller who shadows a base view with its own
+    ``createOrReplaceTempView`` owns that name until it drops it; the
+    key cannot see shadows."""
+    return _VIEWS_REGISTERED.get(spark.sparkContext.applicationId, {}).get(name)
 
 
 def load_tables(
@@ -121,37 +102,31 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load tables and register each as a temp view of the same name.
 
-    Memoized per (session, sf_dir, table set, source fingerprints):
-    repeated builds in one session reuse the loaded plans instead of
-    re-paying schema/footer reads.  Views are re-registered whenever
-    the key changes (sf_dir switch, source rewrite) or a view was
-    dropped; an unchanged key with all views present skips the
-    re-registration (a caller who SHADOWS a view with its own
-    ``createOrReplaceTempView`` owns that name until it drops it —
-    the repo's shadowers already drop in ``finally``)."""
+    Per-table contract: each table is memoized per (session, sf_dir,
+    table) under its own ``(size, mtime_ns)`` source fingerprint, and
+    its view is re-registered only when the view was last registered
+    from a different (sf_dir, fingerprint) or was dropped.  A call whose
+    sources are unchanged costs one ``stat`` and one temp-view probe per
+    table; a rewrite of one file re-reads and re-registers that table
+    alone.  The returned dict is a fresh copy: callers may overwrite its
+    entries locally."""
     apply_runtime_confs(spark)
-    names_t = tuple(names or TABLE_NAMES)
     app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, names_t, _source_fingerprints(sf_dir, names_t))
-    out = _TABLE_CACHE.get(key)
-    if out is None:
-        out = {
-            name: load_table(spark, sf_dir, name) for name in names_t
-        }
-        _TABLE_CACHE[key] = out
-        # one live entry per (session, sf_dir, table set): a rewrite
-        # supersedes the old plans — evict the stale-fingerprint entry
-        # so the cache stays bounded (distinct sf_dirs coexist; a
-        # session touches a handful at most).
-        for stale in [
-            k
-            for k in _TABLE_CACHE
-            if k[:3] == (app_id, sf_dir, names_t) and k != key
-        ]:
-            del _TABLE_CACHE[stale]
-    if not _views_current(spark, app_id, key):
-        for name, df in out.items():
+    registered = _VIEWS_REGISTERED.setdefault(app_id, {})
+    cat = spark._jsparkSession.sessionState().catalog()
+    out = {}
+    for name in names or TABLE_NAMES:
+        fp = _source_fingerprint(sf_dir, name)
+        entry = _TABLE_CACHE.get((app_id, sf_dir, name))
+        if entry is None or entry[0] != fp:
+            entry = (fp, load_table(spark, sf_dir, name))
+            _TABLE_CACHE[(app_id, sf_dir, name)] = entry
+        df = entry[1]
+        if (
+            registered.get(name) != (sf_dir, fp)
+            or not cat.getTempView(name).isDefined()
+        ):
             df.createOrReplaceTempView(name)
-        _VIEWS_REGISTERED[app_id] = key
-    # shallow copy: callers may overwrite entries in their local dict
-    return dict(out)
+            registered[name] = (sf_dir, fp)
+        out[name] = df
+    return out

@@ -4,31 +4,16 @@ The reference compares each deduplicated batch against the previous
 poll's batch **by dvjId only**, counting new vs repeated rows, then
 replaces the snapshot (``logChangesInCancellations``,
 ``OmmCancellationHandler.java:206-226``).  The Java form is an O(n^2)
-nested loop over driver-held lists; the relational form is a semi /
-anti join, which Spark executes as a broadcast or shuffled hash join —
-O(n) per executor and valid at any scale.
+nested loop over driver-held lists; the relational form is one left
+join onto the previous keys with an existence flag, which Spark executes
+as a broadcast or shuffled hash join — O(n) per executor and valid at
+any scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def snapshot_new(cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id") -> DataFrame:
-    """Rows of ``cur`` whose key was absent from the previous snapshot."""
-    if prev is None:
-        return cur
-    return cur.join(prev.select(key), key, "left_anti")
-
-
-def snapshot_repeated(
-    cur: DataFrame, prev: DataFrame | None, key: str = "dvj_id"
-) -> DataFrame:
-    """Rows of ``cur`` whose key already existed in the previous snapshot."""
-    if prev is None:
-        return cur.limit(0)
-    return cur.join(prev.select(key), key, "left_semi")
 
 
 def diff_counts(

@@ -29,7 +29,11 @@ Fixture-coverage notes (FIXTURES.md §A requirements):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
+
+from ..catalog import view_key
 
 # 16-digit GID whose 12th digit carries the direction (SURVEY §2.2 P3):
 # 9011000000000000 + direction*10^4 + low-4-digit suffix never touches
@@ -143,53 +147,61 @@ _OMM_DERIVATION: dict[str, str] = {
     """,
 }
 
-#: Base testdata tables each derived relation reads (for column pruning
-#: sanity and for the DuckDB oracle prefix).
 OMM_VIEW_NAMES = list(_OMM_DERIVATION)
 
+#: derived relation -> the one base testdata table its SQL reads
+OMM_BASE_TABLE: dict[str, str] = {
+    name: re.search(r"\bFROM\s+(\w+)", sql).group(1)
+    for name, sql in _OMM_DERIVATION.items()
+}
 
-#: appId -> the catalog views_key whose OMM views were registered last
-#: (the catalog _VIEWS_REGISTERED discipline one level up): parsing +
-#: registering the 11 derivations costs ~0.2-0.3 s per call warm, and
-#: every cancellation-family build paid it.  Re-registration happens
-#: whenever the BASE views were re-pointed (key change) or any OMM
-#: view is missing (a caller dropped it); an unchanged key with all
-#: views present skips the rebuild.  Same shadowing contract as the
-#: catalog: a caller who shadows an OMM view owns that name until it
-#: drops it.  Fixture injectors should shadow the OMM relations, not
-#: the base tables (a base-table shadow under an unchanged catalog
-#: key is invisible to this guard, exactly as it is to the catalog's).
-_OMM_REGISTERED: dict[str, tuple] = {}
-_OMM_FRAMES: dict[str, dict[str, DataFrame]] = {}
+
+def omm_sources(spark: SparkSession, names) -> tuple:
+    """The catalog view keys of the base tables behind the OMM relations
+    ``names``: equal keys mean the relations read the same sources."""
+    return tuple(view_key(spark, OMM_BASE_TABLE[name]) for name in names)
+
+
+#: appId -> {OMM view: (base view key, frame) it was registered with}.
+#: Parsing and registering one derivation costs ~20-30 ms warm, and every
+#: cancellation-family build and poll cycle asks for all 11.
+_OMM_REGISTERED: dict[str, dict[str, tuple]] = {}
 
 
 def register_omm_views(spark: SparkSession) -> dict[str, DataFrame]:
     """Create the 11 OMM relations as temp views over the base views.
 
     Callers must have registered the base testdata views first
-    (``catalog.load_tables``).  Views are lazy projections — Catalyst
-    inlines them, so e.g. a query touching only ``deviation_case_id``
-    still prunes the events scan to one column.  Memoized per
-    (session, base-views key) — see ``_OMM_REGISTERED``.
-    """
-    from ..catalog import views_key
+    (``catalog.load_tables``).  Views are lazy projections: Catalyst
+    inlines them, so a query touching only ``deviation_case_id`` still
+    prunes the events scan to one column.
 
+    Per-view contract: each relation is re-registered only when its base
+    table's catalog view key moved (sf_dir switch, source rewrite) or
+    the view was dropped, so an ``events`` rewrite re-registers
+    ``omm_deviation_cases`` and ``omm_affected_departures`` and serves
+    the other nine unchanged.  A caller who shadows an OMM view owns
+    that name until it drops it.  Fixture injectors should shadow the
+    OMM relations, not the base tables: a base-table shadow leaves the
+    catalog key unchanged and is invisible here.
+    """
     app_id = spark.sparkContext.applicationId
-    key = (views_key(spark),)
-    if _OMM_REGISTERED.get(app_id) == key and app_id in _OMM_FRAMES:
-        cat = spark._jsparkSession.sessionState().catalog()
-        if all(
-            cat.getTempView(name).isDefined() for name in _OMM_DERIVATION
-        ):
-            return dict(_OMM_FRAMES[app_id])
+    registered = _OMM_REGISTERED.setdefault(app_id, {})
+    cat = spark._jsparkSession.sessionState().catalog()
     out: dict[str, DataFrame] = {}
     for name, sql in _OMM_DERIVATION.items():
-        df = spark.sql(sql)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    _OMM_REGISTERED[app_id] = key
-    _OMM_FRAMES[app_id] = out
-    return dict(out)
+        key = omm_sources(spark, [name])
+        entry = registered.get(name)
+        if (
+            entry is None
+            or entry[0] != key
+            or not cat.getTempView(name).isDefined()
+        ):
+            df = spark.sql(sql)
+            df.createOrReplaceTempView(name)
+            entry = registered[name] = (key, df)
+        out[name] = entry[1]
+    return out
 
 
 def omm_ctes() -> str:

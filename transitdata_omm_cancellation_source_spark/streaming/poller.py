@@ -29,6 +29,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql.streaming import StreamingQueryListener
 
 from ..observability import get_json_logger, monotonic_ms, warn_if_slow
@@ -41,10 +42,14 @@ class SnapshotStore:
     """Versioned parquet store for the cross-poll snapshot (A3 state).
 
     Writes go to a fresh ``v{n}`` directory, then the ``LATEST``
-    pointer flips — a reader never observes a half-written snapshot,
-    and the previous version stays readable while the new one writes
-    (the same read-then-replace cycle the reference does in memory at
-    ``OmmCancellationHandler.java:225``).
+    pointer flips: the new pointer is written to a temp file and renamed
+    over ``LATEST`` with ``os.replace``, so a reader never observes a
+    half-written snapshot or a torn pointer, and the previous version
+    stays readable while the new one writes (the same read-then-replace
+    cycle the reference does in memory at
+    ``OmmCancellationHandler.java:225``).  A missing pointer means no
+    snapshot yet; an unparsable one raises, because reading it as "no
+    snapshot" would silently re-emit every row as ``new``.
     """
 
     def __init__(self, path: str):
@@ -57,9 +62,15 @@ class SnapshotStore:
     def current_version(self) -> int | None:
         try:
             with open(self._pointer()) as fh:
-                return int(fh.read().strip())
-        except (FileNotFoundError, ValueError):
+                text = fh.read()
+        except FileNotFoundError:
             return None
+        try:
+            return int(text.strip())
+        except ValueError:
+            raise ValueError(
+                f"unparsable snapshot pointer {self._pointer()}: {text!r}"
+            ) from None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         v = self.current_version()
@@ -70,8 +81,12 @@ class SnapshotStore:
     def replace(self, df: DataFrame) -> None:
         v = (self.current_version() or 0) + 1
         df.write.mode("overwrite").parquet(os.path.join(self.path, f"v{v}"))
-        with open(self._pointer(), "w") as fh:
+        tmp = self._pointer() + ".tmp"
+        with open(tmp, "w") as fh:
             fh.write(str(v))
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self._pointer())
         stale = os.path.join(self.path, f"v{v - 2}")
         if os.path.isdir(stale):  # keep current + previous, prune older
             shutil.rmtree(stale, ignore_errors=True)
@@ -91,17 +106,28 @@ def _f8_combo() -> "F.Column":
     )
 
 
+#: read-error conditions that mean the sink holds no data yet
+_NO_SINK_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def _check_sink_schema(
     spark: SparkSession, sink_dir: str, messages: DataFrame
 ) -> None:
     """Refuse to append a value payload whose type contradicts the
     existing sink — switching ``value_format`` against a populated sink
     would otherwise interleave binary and string ``value`` columns in
-    one parquet directory and break every downstream read."""
+    one parquet directory and break every downstream read.
+
+    Only a sink with no data yet counts as the first cycle: a missing
+    directory, or one an aborted first write left without data files.
+    Any other read error (a corrupt part file, a permission error)
+    propagates."""
     try:
         existing = spark.read.parquet(sink_dir).schema
-    except Exception:  # first cycle: sink doesn't exist yet
-        return
+    except AnalysisException as exc:
+        if exc.getCondition() in _NO_SINK_YET:
+            return
+        raise
     # names + types only: parquet read-back flips nullability flags
     if [(f.name, f.dataType) for f in existing] != [
         (f.name, f.dataType) for f in messages.schema
