@@ -344,23 +344,21 @@ def main() -> None:
     # (observed 2-10x outliers on individual queries run-to-run); the
     # per-query minimum is the standard steady-state estimator.
     #
-    # PASS-INDEPENDENCE BOUNDARY (r15 verdict #4 — stated precisely):
-    # release_tracked() between passes unpersists every tracked FRAME
-    # and clears the frame caches, so in-session shared subtrees
-    # (tokenize frames, pair frames, PQ assignments) are rebuilt and
-    # paid inside every pass.  Two sanctioned tiers survive passes —
-    # and sessions — by design:
-    #  - the DISK artifact tier (standing indexes: shingle_sets,
-    #    band_frame, cosine_vb, ivf assignment; trained codebook/
-    #    quantizer rows): steady-state serving is their POINT (r14
-    #    verdict #1).  Which artifacts the timed region loaded vs
-    #    built is reported machine-readably below
+    # PASS-INDEPENDENCE BOUNDARY (the artifact store's lifetime
+    # table, artifacts.py): release_tracked() between passes
+    # unpersists every tracked frame and drops the store's frames, so
+    # in-session shared subtrees (tokenize frames, pair frames, PQ
+    # assignments) are rebuilt and paid inside every pass.  Two kinds
+    # survive passes by design:
+    #  - the DISK tier (standing frames: shingle_sets, band_frame,
+    #    cosine_vb; trained codebook/quantizer rows) also survives
+    #    sessions: steady-state serving is its point.  Which artifacts
+    #    the timed region loaded vs built is reported below
     #    (``disk_artifacts_served``), so a warm-vs-cold run is always
     #    distinguishable from the JSON alone.
-    #  - bounded VALUE memos (caching.register_value_memo: hot-shingle
-    #    order, pass counts, corpus count, max|u|) — plan parameters /
-    #    trained scalars, no executor memory; cleared only by
-    #    caching.clear_value_memos().
+    #  - stored values (hot-shingle order, pass counts, corpus count,
+    #    max|u|) and trained rows stay in memory: no executor memory;
+    #    dropped only by caching.clear_value_memos().
     #
     # GATED ON THE GEMM PROBE (r14 verdict #3): each pass starts only
     # after a bounded wait for delivered compute above the floor, and

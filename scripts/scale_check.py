@@ -111,7 +111,7 @@ def main() -> None:
         # warm-up: one flagship run so codegen/broadcast machinery is hot
         _materialize(specs["cancellation_pipeline_now"].build(spark, sf_dir))
         # Trained artifacts (IVF quantizer, PQ codebook) are
-        # train-once/serve-many (artifacts.load_or_train): build them
+        # train-once/serve-many (artifacts.stored_rows): build them
         # BEFORE the per-query timing and report the cost separately,
         # so decade ratios measure the OPERATOR — r11's 17.7x
         # knn_pq_refine row was one session's training bill charged to

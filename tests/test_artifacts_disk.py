@@ -1,16 +1,16 @@
-"""Disk-persisted trained artifacts (artifacts.load_or_train).
+"""Trained rows in the artifact store (artifacts.stored_rows).
 
-The r11 verdict's production gap: the IVF quantizer and PQ codebook
-were session-memory-only and retrained per session (the 17.7x
-knn_pq_refine decade row was one session's training bill).  These
-tests pin the r12 disk layer's contract:
+These tests pin the disk tier's contract for the IVF quantizer and the
+PQ codebook:
 
 - a MISS trains, writes under the artifact root, and serves the rows;
 - a HIT serves bit-identical rows WITHOUT the trainer running — proved
-  both in-session (trainer monkeypatched to raise) and from a genuinely
+  both in-session (trainer seam patched to raise) and from a genuinely
   COLD SparkSession (separate JVM, different application id), which
   also proves the disk key is session-independent;
-- rewriting the source parquet changes the key (no stale artifact).
+- rewriting the source parquet changes the key (no stale artifact);
+- any edit to the package's source changes the key, however deep below
+  the trainer it sits; nothing but ``*.py`` files counts.
 """
 
 from __future__ import annotations
@@ -23,12 +23,12 @@ import sys
 
 import pytest
 
-from transitdata_omm_cancellation_source_spark import artifacts
+from transitdata_omm_cancellation_source_spark import artifacts, caching
 from transitdata_omm_cancellation_source_spark.catalog import load_tables
 from transitdata_omm_cancellation_source_spark.operators import pq
 from transitdata_omm_cancellation_source_spark.operators import similarity as sim
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, edit_source, package_copy
 
 
 def _quantizer_rows(spark, t):
@@ -46,19 +46,16 @@ def _codebook_rows(spark, t):
 
 
 @pytest.fixture()
-def artifact_dir(spark, tmp_path, monkeypatch):
+def artifact_dir(spark, tmp_path):
+    prior = spark.conf.get(artifacts.ARTIFACT_DIR_CONF)
     spark.conf.set(artifacts.ARTIFACT_DIR_CONF, str(tmp_path))
-    monkeypatch.setattr(sim, "_CENTROID_ARTIFACT_CACHE", {})
-    monkeypatch.setattr(pq, "_CODEBOOK_CACHE", {})
+    caching.clear_value_memos()  # a cold memory tier over a cold disk
     yield tmp_path
-    spark.conf.unset(artifacts.ARTIFACT_DIR_CONF)
+    caching.clear_value_memos()
+    spark.conf.set(artifacts.ARTIFACT_DIR_CONF, prior)
 
 
 def _forbid_training(monkeypatch):
-    # the seam, not the trainers' helpers: since the r14 bindings
-    # closure, patching a helper function CHANGES the disk key (that
-    # is the feature), so the retrain guard must sit where the key
-    # cannot see it.
     def boom(train):
         raise AssertionError("artifact hit must not retrain")
 
@@ -77,9 +74,8 @@ def test_load_without_train_bit_identity_in_session(
         (digest_dir,) = (artifact_dir / name).iterdir()
         assert (digest_dir / "_SUCCESS").is_file()
 
-    # second "session": memory caches cleared, trainers forbidden
-    monkeypatch.setattr(sim, "_CENTROID_ARTIFACT_CACHE", {})
-    monkeypatch.setattr(pq, "_CODEBOOK_CACHE", {})
+    # second "session": memory tier cleared, trainers forbidden
+    caching.clear_value_memos()
     _forbid_training(monkeypatch)
     assert _quantizer_rows(spark, t) == cv1
     assert _codebook_rows(spark, t) == cb1
@@ -136,110 +132,82 @@ def test_rewritten_source_is_a_key_miss(spark, artifact_dir, tmp_path):
     change the disk key — a stale trained artifact can never serve a
     regenerated corpus."""
     t = load_tables(spark, SF_SMOKE)
-    k1 = artifacts.artifact_disk_key("ivf_quantizer", t["embeddings"])
+    k1 = artifacts.disk_key("ivf_quantizer", t["embeddings"])
     alt = tmp_path / "alt"
     alt.mkdir()
     shutil.copy(f"{SF_SMOKE}/embeddings.parquet", alt / "embeddings.parquet")
     os.utime(alt / "embeddings.parquet", (1, 1))
     emb2 = spark.read.parquet(str(alt / "embeddings.parquet"))
-    k2 = artifacts.artifact_disk_key("ivf_quantizer", emb2)
+    k2 = artifacts.disk_key("ivf_quantizer", emb2)
     assert k1 != k2
     # and the name participates too: two artifacts from one source
     # cannot collide
-    assert artifacts.artifact_disk_key("pq_codebook", t["embeddings"]) != k1
+    assert artifacts.disk_key("pq_codebook", t["embeddings"]) != k1
 
 
-def test_trainer_body_edit_is_a_key_miss(spark):
-    """The r13 fingerprint: editing a trainer's BODY must change the
-    disk key (a forgotten _FORMAT_VERSION bump can no longer serve a
-    stale artifact), while an identical body keys identically."""
-    t = load_tables(spark, SF_SMOKE)
-
-    def train_a():
-        return 1  # recipe v1
-
-    def train_b():
-        return 2  # recipe v2
-
-    def train_a2():
-        return 1  # recipe v1
-
-    src = t["embeddings"]
-    ka = artifacts.artifact_disk_key("dummy", src, train_a)
-    kb = artifacts.artifact_disk_key("dummy", src, train_b)
-    ka2 = artifacts.artifact_disk_key("dummy", src, train_a2)
-    assert ka != kb
-    # same-body-different-name trainers differ only through the source
-    # text (which includes the def line) — the fingerprint is source-
-    # grain, so these differ too; what must HOLD equal is the same
-    # function fingerprinted twice (cross-session stability).
-    assert ka == artifacts.artifact_disk_key("dummy", src, train_a)
-    assert ka != ka2  # def line differs; conservative misses are fine
-    # trainer-less keys (legacy callers) still work and differ from
-    # trainer-keyed ones
-    k0 = artifacts.artifact_disk_key("dummy", src)
-    assert k0 not in (ka, kb)
+def _digest_of(monkeypatch, root):
+    """Key the store on the package copy at ``root``, as a process
+    importing that tree would."""
+    monkeypatch.setattr(
+        artifacts, "package_digest", lambda: artifacts.source_digest(str(root))
+    )
 
 
-_HELPER_CONSTANT = 17
+def test_trainer_body_edit_is_a_key_miss(spark, tmp_path, monkeypatch):
+    """Editing a trainer's body changes the package digest and with it
+    the artifact's disk key."""
+    src = pq._vectors(load_tables(spark, SF_SMOKE))
+    root = package_copy(tmp_path)
+    _digest_of(monkeypatch, root)
+    k1 = artifacts.disk_key("pq_codebook", src)
+    edit_source(
+        root / "operators" / "pq.py",
+        "    if rounds <= 0:",
+        "    if rounds < 1:",
+    )
+    assert artifacts.disk_key("pq_codebook", src) != k1
 
 
-def _helper_v(x):
-    return x + 1  # helper recipe
+def test_helper_edit_two_calls_below_trainer_is_a_key_miss(
+    spark, tmp_path, monkeypatch
+):
+    """ivf_quantizer's trainer calls ``_fold_centroids``, which calls
+    ``_chunk_fold_pdf``: a body edit two calls below the trainer must
+    still miss."""
+    import inspect
+
+    assert "_fold_centroids(" in inspect.getsource(sim.ivf_quantizer)
+    assert "_chunk_fold_pdf" not in inspect.getsource(sim.ivf_quantizer)
+    assert "_chunk_fold_pdf(" in inspect.getsource(sim._fold_centroids)
+
+    src = load_tables(spark, SF_SMOKE)["embeddings"]
+    root = package_copy(tmp_path)
+    _digest_of(monkeypatch, root)
+    d1 = artifacts.package_digest()
+    k1 = artifacts.disk_key("ivf_quantizer", src)
+    edit_source(
+        root / "operators" / "similarity.py",
+        "        acc = mat.cumsum(axis=0)[-1]",
+        "        acc = mat.cumsum(axis=0)[-1] + 0.0",
+    )
+    assert artifacts.package_digest() != d1
+    assert artifacts.disk_key("ivf_quantizer", src) != k1
 
 
-def test_referenced_binding_edits_are_key_misses(spark, monkeypatch):
-    """r14 bindings closure (r13 verdict #7 / ADVICE): a trainer whose
-    BODY is unchanged must still miss the cache when a helper it calls
-    or a module constant it reads changes."""
-    t = load_tables(spark, SF_SMOKE)
-    src = t["embeddings"]
-
-    def train():
-        return _helper_v(_HELPER_CONSTANT)
-
-    k1 = artifacts.artifact_disk_key("dummy", src, train)
-    # same everything -> same key (cross-session stability grain)
-    assert artifacts.artifact_disk_key("dummy", src, train) == k1
-
-    # helper-body edit -> miss
-    def _helper_v2(x):
-        return x + 2  # helper recipe CHANGED
-
-    orig_helper = train.__globals__["_helper_v"]
-    monkeypatch.setitem(train.__globals__, "_helper_v", _helper_v2)
-    k2 = artifacts.artifact_disk_key("dummy", src, train)
-    assert k2 != k1
-
-    # module-constant edit -> miss
-    monkeypatch.setitem(train.__globals__, "_helper_v", orig_helper)
-    assert artifacts.artifact_disk_key("dummy", src, train) == k1
-    monkeypatch.setitem(train.__globals__, "_HELPER_CONSTANT", 18)
-    assert artifacts.artifact_disk_key("dummy", src, train) != k1
+def test_unchanged_tree_digests_identically(tmp_path):
+    assert artifacts.source_digest(str(package_copy(tmp_path / "a"))) == (
+        artifacts.package_digest()
+    )
+    assert artifacts.source_digest(str(package_copy(tmp_path / "b"))) == (
+        artifacts.package_digest()
+    )
 
 
-def test_closure_cell_edits_are_key_misses(spark):
-    """Closed-over values participate in the key: the same lambda text
-    built over two different thresholds keys differently, while opaque
-    objects (DataFrames) fold in by type only — the data itself is
-    covered by the source fingerprints."""
-    t = load_tables(spark, SF_SMOKE)
-    src = t["embeddings"]
-
-    def make(tau):
-        return lambda: tau
-
-    ka = artifacts.artifact_disk_key("dummy", src, make(0.5))
-    kb = artifacts.artifact_disk_key("dummy", src, make(0.9))
-    assert ka != kb
-    assert artifacts.artifact_disk_key("dummy", src, make(0.5)) == ka
-
-
-def test_mixed_type_set_binding_falls_back_to_type_grain():
-    """ADVICE r14: a mixed-type (unsortable) set referenced by a trainer
-    must fall back to the type-grain repr, not raise TypeError out of
-    the fingerprint (sorted() sits inside the try for exactly this)."""
-    rendered = artifacts._binding_repr({1, "a"})
-    assert rendered.startswith("<builtins.set")
-    # sortable sets still render by value (order-normalized)
-    assert artifacts._binding_repr({3, 1, 2}) == "[1,2,3]"
+def test_pycache_and_non_py_files_do_not_count(tmp_path):
+    root = package_copy(tmp_path)
+    before = artifacts.source_digest(str(root))
+    (root / "__pycache__").mkdir(exist_ok=True)
+    (root / "__pycache__" / "artifacts.cpython-312.pyc").write_bytes(b"\0junk")
+    (root / "operators" / "notes.txt").write_text("not code")
+    (root / "data.json").write_text("{}")
+    assert artifacts.source_digest(str(root)) == before

@@ -192,29 +192,32 @@ def test_headline_set_always_fits_tail_budget():
     assert json.loads(line)["queries"]  # round-trips
 
 
-def test_value_memo_registry_survives_release_and_clears_explicitly():
+def test_value_memo_registry_survives_release_and_clears_explicitly(spark):
     from transitdata_omm_cancellation_source_spark import caching
+    from transitdata_omm_cancellation_source_spark.artifacts import stored_value
 
-    memo = caching.register_value_memo({})
-    try:
-        memo["k"] = 42
-        caching.release_tracked()
-        assert memo == {"k": 42}, "value memos must survive release_tracked"
-        caching.clear_value_memos()
-        assert memo == {}
-    finally:
-        # remove by IDENTITY: list.remove compares by ==, and two empty
-        # dicts are equal — it would silently drop a production memo.
-        caching._VALUE_MEMOS[:] = [
-            c for c in caching._VALUE_MEMOS if c is not memo
-        ]
+    src = spark.range(3)
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return 42
+
+    assert stored_value("survive_probe", src, compute) == 42
+    caching.release_tracked()
+    assert stored_value("survive_probe", src, compute) == 42
+    assert len(calls) == 1, "stored values must survive release_tracked"
+    caching.clear_value_memos()
+    assert stored_value("survive_probe", src, compute) == 42
+    assert len(calls) == 2, "clear_value_memos must drop stored values"
 
 
-def test_known_value_memos_are_registered():
-    """The documented exclusion list (r15 verdict #4): every known
-    survive-release value memo is registered so clear_value_memos()
-    actually reaches it."""
-    from transitdata_omm_cancellation_source_spark import caching
+def test_clear_value_memos_recomputes_every_value_producer(spark, monkeypatch):
+    """Every value and trained-rows producer serves from memory across
+    release_tracked, and recomputes (or reloads) after
+    clear_value_memos()."""
+    from transitdata_omm_cancellation_source_spark import artifacts, caching
+    from transitdata_omm_cancellation_source_spark.catalog import load_tables
     from transitdata_omm_cancellation_source_spark.operators import (
         dedup_fuzzy,
         graph,
@@ -223,13 +226,41 @@ def test_known_value_memos_are_registered():
         similarity,
     )
 
-    registered = [id(c) for c in caching._VALUE_MEMOS]
-    for memo in (
-        dedup_fuzzy._ESTIMATE_MEMO,
-        graph._PASS_MEMO,
-        pca._MAXU_CACHE,
-        pq._CODEBOOK_CACHE,
-        similarity._COUNT_CACHE,
-        similarity._CENTROID_ARTIFACT_CACHE,
-    ):
-        assert id(memo) in registered
+    from conftest import SF_SMOKE
+
+    t = load_tables(spark, SF_SMOKE)
+    sh = dedup_fuzzy._minhash_shingles(t)
+    items = t["lineitem"].select("l_orderkey", "l_partkey")
+    producers = {
+        "corpus_count": lambda: similarity.corpus_count(spark, t["embeddings"]),
+        "ivf_quantizer": lambda: similarity.ivf_quantizer(spark, t),
+        "pq_codebook": lambda: pq._shared_codebook(spark, pq._vectors(t)),
+        "max_abs_u": lambda: pca.corpus_max_abs_u(spark, t["embeddings"]),
+        "pagerank_passes": lambda: graph._pagerank_pass_count(spark, items),
+        "hot_shingles": lambda: dedup_fuzzy._hot_shingles(sh),
+        "ngram_passes": lambda: dedup_fuzzy._ngram_pass_count(spark, sh),
+    }
+    loads = []
+    serve = artifacts._serve
+
+    def spy(kind, name, source, extra, load):
+        def counted():
+            loads.append(name)
+            return load()
+
+        return serve(kind, name, source, extra, counted)
+
+    monkeypatch.setattr(artifacts, "_serve", spy)
+
+    def run_all():
+        loads.clear()
+        for produce in producers.values():
+            produce()
+        return set(loads)
+
+    run_all()
+    assert run_all() == set(), "a second use must be served from memory"
+    caching.release_tracked()
+    assert run_all() == set(), "values and trained rows survive release"
+    caching.clear_value_memos()
+    assert run_all() >= set(producers)

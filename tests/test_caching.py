@@ -31,33 +31,42 @@ def test_lloyd_rounds_release(spark):
 
 
 def test_artifact_cache_key_is_content_sensitive(spark, tmp_path):
-    from transitdata_omm_cancellation_source_spark.caching import (
-        artifact_cache_key,
-    )
+    """The store's memory key follows the DATA, not just the plan: a
+    rewrite of the files behind the same path is a miss."""
+    from transitdata_omm_cancellation_source_spark.artifacts import stored_value
 
     p = str(tmp_path / "vecs")
     spark.range(5).write.mode("overwrite").parquet(p)
     df = spark.read.parquet(p)
-    k1 = artifact_cache_key(spark, df)
-    assert k1 == artifact_cache_key(spark, spark.read.parquet(p))  # stable
+    assert stored_value("count_probe", df, df.count) == 5
+    again = spark.read.parquet(p)
+    assert stored_value("count_probe", again, lambda: -1) == 5  # stable
 
-    # rewriting the files behind the SAME path must change the key —
-    # a plan-hash-only key would serve a stale trained artifact here
+    # a plan-hash-only key would serve the stale count here
     spark.range(7).write.mode("overwrite").parquet(p)
-    k2 = artifact_cache_key(spark, spark.read.parquet(p))
-    assert k2 != k1
+    rewritten = spark.read.parquet(p)
+    assert stored_value("count_probe", rewritten, rewritten.count) == 7
 
 
-def test_replace_plan_artifact_evicts_superseded_entries():
-    from transitdata_omm_cancellation_source_spark.caching import (
-        replace_plan_artifact,
-    )
+def test_new_key_supersedes_the_entry_for_the_same_plan(spark, tmp_path):
+    """One memory entry per (app, name, plan): a rewrite replaces the
+    superseded entry, a different plan keeps its own."""
+    from transitdata_omm_cancellation_source_spark import artifacts
 
-    cache: dict = {}
-    k_old = ("app", 1, (("f", 10, 100),))
-    k_new = ("app", 1, (("f", 12, 200),))  # same plan, rewritten data
-    k_other = ("app", 2, (("g", 1, 1),))   # different plan — untouched
-    replace_plan_artifact(cache, k_old, "old")
-    replace_plan_artifact(cache, k_other, "x")
-    replace_plan_artifact(cache, k_new, "new")
-    assert cache == {k_new: "new", k_other: "x"}
+    p, q = str(tmp_path / "p"), str(tmp_path / "q")
+    spark.range(3).write.parquet(p)
+    spark.range(4).write.parquet(q)
+    dp, dq = spark.read.parquet(p), spark.read.parquet(q)
+    artifacts.stored_value("supersede_probe", dp, dp.count)
+    artifacts.stored_value("supersede_probe", dq, dq.count)
+    spark.range(6).write.mode("overwrite").parquet(p)
+    dp2 = spark.read.parquet(p)
+    assert artifacts.stored_value("supersede_probe", dp2, dp2.count) == 6
+
+    entries = {
+        scope: entry
+        for scope, entry in artifacts._MEMORY.items()
+        if scope[1] == "supersede_probe"
+    }
+    assert len(entries) == 2
+    assert sorted(entry[2] for entry in entries.values()) == [4, 6]

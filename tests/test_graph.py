@@ -136,37 +136,29 @@ def test_broadcast_guard_raises_past_budget_and_validates_conf(spark):
 
 
 def test_known_pass_count_skips_the_proxy_job(spark):
-    """r13 ADVICE: a forced conf or memo hit must answer without any
-    Spark job — repeated builds were paying the estimator's fact count
-    the memo existed to avoid."""
+    """r13 ADVICE: a forced conf or a stored count must answer without
+    any Spark job — repeated builds were paying the estimator's fact
+    count the store exists to avoid."""
+    from transitdata_omm_cancellation_source_spark.caching import (
+        clear_value_memos,
+    )
     from transitdata_omm_cancellation_source_spark.operators.graph import (
-        _PASS_MEMO,
         _PR_PASSES_CONF,
-        _known_pass_count,
-        _pass_memo_key,
+        _pagerank_pass_count,
     )
 
+    def proxy():
+        raise AssertionError("a known pass count must not run the proxy")
+
+    clear_value_memos()
     items = _li(spark, [(1, 10), (1, 20)])
-    # in-memory frame: no fingerprints -> no memo key -> unknown
-    assert _pass_memo_key(spark, items) is None
-    assert _known_pass_count(spark, items) is None
     spark.conf.set(_PR_PASSES_CONF, "4")
     try:
-        assert _known_pass_count(spark, items) == 4
+        assert _pagerank_pass_count(spark, items, proxy) == 4
     finally:
         spark.conf.unset(_PR_PASSES_CONF)
-    # a file-backed frame memoizes: second lookup answers from the dict
-    import pathlib
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        path = str(pathlib.Path(td) / "li.parquet")
-        items.write.parquet(path)
-        fitems = spark.read.parquet(path)
-        key = _pass_memo_key(spark, fitems)
-        assert key is not None
-        _PASS_MEMO[key] = 7
-        try:
-            assert _known_pass_count(spark, fitems) == 7
-        finally:
-            _PASS_MEMO.pop(key, None)
+    # the first estimate runs the proxy; the stored count answers after
+    runs = []
+    assert _pagerank_pass_count(spark, items, lambda: runs.append(1)) == 1
+    assert runs == [1]
+    assert _pagerank_pass_count(spark, items, proxy) == 1

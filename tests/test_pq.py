@@ -152,6 +152,28 @@ def test_codebook_shared_across_pq_queries(spark):
     assert _shared_codebook(spark, _vectors({"embeddings": other})) is not first
 
 
+def test_fileless_corpora_each_get_their_own_codebook(spark):
+    # Two createDataFrame corpora with one schema have no input files,
+    # so a disk key could not tell them apart: each must be served the
+    # codebook of its OWN training, never the other's.
+    from transitdata_omm_cancellation_source_spark.operators.pq import (
+        _shared_codebook,
+    )
+
+    def rows_of(df):
+        return sorted((r["sub"], r["code"], list(r["c"])) for r in df.collect())
+
+    vecs_a, vecs_b = (
+        _vectors({"embeddings": _emb(spark, [(i, _vec(i + s)) for i in range(K_CODES)])})
+        for s in (0, 3)
+    )
+    served_a = rows_of(_shared_codebook(spark, vecs_a))
+    served_b = rows_of(_shared_codebook(spark, vecs_b))
+    assert served_a == rows_of(_train_codebook(vecs_a))
+    assert served_b == rows_of(_train_codebook(vecs_b))
+    assert served_a != served_b  # non-vacuous: the corpora train apart
+
+
 def test_adc_ranks_exact_duplicate_first(spark):
     # query 0 (vec_id 0 is both a seed and a query: 0 % QUERY_MOD == 0)
     # has an exact duplicate at vec_id 17 — identical vector => same

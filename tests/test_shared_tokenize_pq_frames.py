@@ -2,8 +2,7 @@
 frame (functions.corpus.doc_words_frame) and the PQ packed-code
 assignment (operators.pq._shared_packed_codes).
 
-Both are session artifacts in the _family_frame discipline: built
-once, served as the SAME object to every consumer, values identical
+Both are stored frames in the artifact store: built once, served as the SAME object to every consumer, values identical
 to the per-query derivations they replaced, and released (with their
 persisted data) by release_tracked so a bench pass can never carry
 them across runs.

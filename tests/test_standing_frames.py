@@ -1,9 +1,9 @@
-"""Disk-persisted STANDING INDEXES for the incremental-dedup family
-(r14 verdict #1): the band index, shingle sets and embedding
-assignment frame live as parquet artifacts keyed by source-file
-fingerprints + builder bindings-closure fingerprint, so a FRESH
-session's first delta batch LOADS the corpus index instead of
-re-paying its build — and a corpus rewrite is a key miss.
+"""Disk-persisted STANDING INDEXES for the incremental-dedup family:
+the band index, shingle sets and embedding assignment frame are stored
+frames with ``disk=True``, keyed by source-file fingerprints and the
+package digest, so a FRESH session's first delta batch LOADS the corpus
+index instead of re-paying its build — and a corpus rewrite or a code
+edit is a key miss.
 """
 
 from __future__ import annotations
@@ -16,31 +16,27 @@ import pytest
 import transitdata_omm_cancellation_source_spark.artifacts as artifacts
 from transitdata_omm_cancellation_source_spark.artifacts import (
     ARTIFACT_DIR_CONF,
-    load_or_build_frame,
+    stored_frame,
 )
 from transitdata_omm_cancellation_source_spark.caching import release_tracked
 from transitdata_omm_cancellation_source_spark.operators.dedup_fuzzy import (
     _cosine_vb,
-    _family_frame,
     _minhash_shingles,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, edit_source, package_copy
 
 
 @pytest.fixture()
 def artifact_dir(spark, tmp_path):
     """Point the artifact root at a per-test dir and clear the
     in-session frame cache around it, so each test sees a cold disk."""
-    prior = spark.conf.get(ARTIFACT_DIR_CONF, "")
+    prior = spark.conf.get(ARTIFACT_DIR_CONF)
     spark.conf.set(ARTIFACT_DIR_CONF, str(tmp_path / "artifacts"))
     release_tracked()
     yield str(tmp_path / "artifacts")
     release_tracked()
-    if prior:
-        spark.conf.set(ARTIFACT_DIR_CONF, prior)
-    else:
-        spark.conf.unset(ARTIFACT_DIR_CONF)
+    spark.conf.set(ARTIFACT_DIR_CONF, prior)
 
 
 def _tables(spark):
@@ -98,6 +94,7 @@ def test_embedding_assignment_frame_loads(spark, artifact_dir, monkeypatch):
 def test_corpus_rewrite_is_a_key_miss(spark, tmp_path, monkeypatch):
     """Same path, rewritten bytes -> different fingerprints -> the
     standing index is REBUILT, never served stale."""
+    prior = spark.conf.get(ARTIFACT_DIR_CONF)
     spark.conf.set(ARTIFACT_DIR_CONF, str(tmp_path / "artifacts"))
     try:
         corpus = tmp_path / "docs"
@@ -125,41 +122,53 @@ def test_corpus_rewrite_is_a_key_miss(spark, tmp_path, monkeypatch):
         assert n2 < docs.count() * 2  # rebuilt over the smaller corpus
     finally:
         release_tracked()
-        spark.conf.unset(ARTIFACT_DIR_CONF)
+        spark.conf.set(ARTIFACT_DIR_CONF, prior)
 
 
-def test_builder_edit_is_a_key_miss(spark, artifact_dir, monkeypatch):
-    """Two different build recipes over the same source publish two
-    different digests — the bindings-closure staleness contract
-    applied to frame artifacts."""
-    t = _tables(spark)
-    src = t["documents"]
+def test_builder_edit_is_a_key_miss(spark, artifact_dir, monkeypatch, tmp_path):
+    """An edit to a frame builder's code publishes a new digest: the
+    builder runs again instead of the old index being served."""
+    calls = _builds(monkeypatch)
+    _minhash_shingles(_tables(spark)).count()
+    assert len(calls) == 1
 
-    def make(limit):
-        return lambda: src.select("doc_id").limit(limit)
-
-    a = load_or_build_frame(spark, "probe_frame", src, make(3))
-    b = load_or_build_frame(spark, "probe_frame", src, make(5))
-    assert a.count() == 3 and b.count() == 5
-    digests = os.listdir(os.path.join(artifact_dir, "probe_frame"))
+    root = package_copy(tmp_path)
+    edit_source(
+        root / "operators" / "dedup_fuzzy.py",
+        '        F.array_sort(X.shingles_from_word_hashes("wh"))',
+        '        F.array_sort(X.shingles_from_word_hashes(F.col("wh")))',
+    )
+    monkeypatch.setattr(  # key the store on the edited copy
+        artifacts, "package_digest", lambda: artifacts.source_digest(str(root))
+    )
+    release_tracked()
+    _minhash_shingles(_tables(spark)).count()
+    assert len(calls) == 2
+    digests = os.listdir(os.path.join(artifact_dir, "shingle_sets"))
     assert len(digests) == 2
 
 
-def test_publish_evicts_old_digests(spark, artifact_dir):
-    src = _tables(spark)["documents"]
-    keep = artifacts._FRAME_KEEP_DIGESTS
+def test_publish_evicts_old_digests(spark, artifact_dir, monkeypatch, tmp_path):
+    """Each rewrite of the source mints a new digest; publishing keeps
+    only the newest ``_KEEP_DIGESTS`` of them, the served one among
+    them."""
+    keep = artifacts._KEEP_DIGESTS
+    path = str(tmp_path / "src")
+
+    def serve():
+        src = spark.read.parquet(path)
+        return stored_frame("evict_probe", src, lambda: src, disk=True)
+
     for i in range(keep + 2):
-        df = load_or_build_frame(
-            spark, "evict_probe", src, (lambda k: lambda: src.limit(k))(i + 1)
-        )
-        assert df.count() == i + 1
+        spark.range(i + 1).write.mode("overwrite").parquet(path)
+        assert serve().count() == i + 1
     digests = os.listdir(os.path.join(artifact_dir, "evict_probe"))
     assert len(digests) == keep
-    # the newest artifact is among the survivors (served, not evicted)
-    newest = load_or_build_frame(
-        spark, "evict_probe", src, (lambda k: lambda: src.limit(k))(keep + 2)
-    )
-    assert newest.count() == keep + 2
+    # the newest artifact survived: a fresh serve loads it, no build
+    calls = _builds(monkeypatch)
+    release_tracked()
+    assert serve().count() == keep + 2
+    assert calls == []
 
 
 def test_full_scan_intermediates_stay_in_session(spark, artifact_dir):
@@ -182,7 +191,8 @@ def test_fileless_corpus_builds_in_session_without_collision(
 ):
     """createDataFrame corpora have no input files, so the disk key
     cannot see their data — they must build in-session (plan-hash
-    keyed), never publish, and never collide with each other."""
+    keyed), never publish, and never collide with each other, even
+    when the frame asks for the disk tier."""
     a = spark.createDataFrame([(1, "alpha beta gamma delta")], "doc_id long, text string")
     b = spark.createDataFrame(
         [(1, "epsilon zeta eta theta"), (2, "iota kappa lambda mu")],
@@ -198,5 +208,6 @@ def test_fileless_corpus_builds_in_session_without_collision(
         os.listdir(artifact_dir) if os.path.isdir(artifact_dir) else []
     )
     assert "shingle_sets" not in published
-    with pytest.raises(ValueError, match="no input files"):
-        load_or_build_frame(spark, "bad", a, lambda: a)
+    assert stored_frame("fileless", a, lambda: a, disk=True).count() == 1
+    assert stored_frame("fileless", b, lambda: b, disk=True).count() == 2
+    assert not os.path.exists(os.path.join(artifact_dir, "fileless"))

@@ -1,21 +1,23 @@
-"""Tracked persist: session-lifetime cache bookkeeping for the
-operator families that persist shared subtrees.
+"""Tracked persists and the two lifetime hooks.
 
-Several builders persist intermediates whose lifetime necessarily
-extends past build() — cross-query shared subtrees (sorted shingle
-sets, verified near-dup pairs) and per-round frames consumed lazily by
-the next loop iteration (Lloyd assignments).  Those frames cannot be
-unpersisted inside the builder (their cache fills only when the caller
-materializes the query), so without bookkeeping a long-lived session
-accumulates them until LRU eviction.  ``persist_tracked`` records every
-such frame; ``release_tracked`` is the explicit cleanup hook for
-workload boundaries (bench.py calls it between passes; a long-lived
-service should call it whenever a query's results have been fully
-consumed).
+Builders persist frames whose cache fills only when the caller runs the
+query (shared subtrees, per-round Lloyd frames), so they cannot
+unpersist them inside ``build()``.  ``persist_tracked`` records each
+such frame so a workload boundary has one deterministic release point
+instead of relying on LRU eviction.
 
-DataFrame.persist() already defaults to a spill-to-disk storage level,
-so the pressure-risk is eviction-triggered recompute, not OOM — the
-hook turns "rely on LRU" into a deterministic release point.
+The artifact store (``artifacts.py``) owns every content-keyed artifact
+and its lifetime table; these are its only two hooks:
+
+- ``release_tracked()`` — the release hook: unpersists every tracked
+  frame and drops the store's frame entries.  Values and trained rows
+  hold no executor memory and survive it, like the disk tier.
+- ``clear_value_memos()`` — the cold hook: drops the store's values and
+  trained rows, so the next use recomputes (or reloads from disk).
+
+``register_artifact_frame_cache`` serves the poll path's view-keyed
+plan memos in ``plans/cancellation.py``, which key on catalog view
+registrations rather than source frames and so live outside the store.
 """
 
 from __future__ import annotations
@@ -25,11 +27,7 @@ from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
 
-#: Artifact caches holding PERSISTED DataFrame objects (not bounded
-#: local relations like the trained-centroid/codebook caches) — their
-#: entries go stale the moment release_tracked unpersists the data, so
-#: registering them here keeps "release" one call with no dangling
-#: unpersisted frame objects handed out afterwards.
+#: dicts of persisted frames outside the store, cleared by release_tracked
 _ARTIFACT_FRAME_CACHES: list[dict] = []
 
 
@@ -40,46 +38,12 @@ def register_artifact_frame_cache(cache: dict) -> dict:
     return cache
 
 
-#: Bounded VALUE memos that deliberately SURVIVE ``release_tracked``
-#: — the documented exclusion list (r15 verdict #4).  Two classes live
-#: here, and ONLY these two:
-#:
-#: - trained artifacts: bounded local relations / scalars whose
-#:   recompute is deterministic and whose production shape is
-#:   train-once/serve-many (the PQ codebook, the IVF quantizer +
-#:   corpus count, PCA's max|u| guard aggregate);
-#: - derived PLAN PARAMETERS: perf-only knobs estimated from the
-#:   corpus (the ngram hot-shingle order and pass counts, pagerank's
-#:   pass count) — results are exact regardless of their value, they
-#:   only shape candidate order / scratch partitioning.
-#:
-#: Both classes hold plain values or ≤4096-row local relations keyed
-#: by ``artifact_cache_key``-style content fingerprints — never
-#: persisted DataFrames (those belong in a registered frame cache so
-#: release_tracked can unpersist their data).  ``release_tracked``
-#: clears FRAMES (executor memory); these memos hold no executor
-#: memory, so a workload boundary keeps them, exactly like the disk
-#: artifact tier.  ``clear_value_memos`` is the cold-path hook for
-#: benches/tests that want a truly-from-scratch build.
-_VALUE_MEMOS: list[dict] = []
-
-
-def register_value_memo(cache: dict) -> dict:
-    """Register a bounded value memo under the survive-release contract
-    above; returns the dict for inline module-level use."""
-    _VALUE_MEMOS.append(cache)
-    return cache
-
-
 def clear_value_memos() -> int:
-    """Drop every registered value memo (trained artifacts + derived
-    plan parameters) — the explicit cold-start hook; returns the
-    number of entries dropped."""
-    n = 0
-    for cache in _VALUE_MEMOS:
-        n += len(cache)
-        cache.clear()
-    return n
+    """The cold hook: drop the store's values and trained rows; returns
+    the number of entries dropped."""
+    from .artifacts import ROWS, VALUE, forget
+
+    return forget((VALUE, ROWS))
 
 
 def persist_tracked(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
@@ -99,6 +63,9 @@ def release_frame(df: DataFrame) -> None:
 
 def release_tracked() -> int:
     """Unpersist every tracked frame (idempotent); returns the count."""
+    from .artifacts import FRAME, forget
+
+    forget((FRAME,))
     n = 0
     for cache in _ARTIFACT_FRAME_CACHES:
         cache.clear()
@@ -110,66 +77,3 @@ def release_tracked() -> int:
         except Exception:  # session already stopped: nothing to free
             pass
     return n
-
-
-def artifact_cache_key(spark, df: DataFrame) -> tuple:
-    """Content-sensitive key for session-lifetime trained artifacts.
-
-    ``semanticHash`` alone keys the PLAN, not the DATA: if the parquet
-    files behind the same path are rewritten within a session (e.g. a
-    regenerated scale corpus), a plan-keyed cache would serve an
-    artifact trained on the old bytes while the oracle reads the new
-    ones.  Appending each input file's (uri, size, mtime) fingerprint
-    makes a rewrite a cache MISS; non-local or unstattable inputs fall
-    back to their uri alone (plan-keyed behavior, the previous
-    contract).  URIs are parsed properly (percent-decoding, authority
-    handling) so Hadoop-encoded paths still fingerprint.  Listing
-    input files touches only the scan's file index — no job runs.
-
-    Consumers should insert via ``replace_plan_artifact`` so a rewrite
-    EVICTS the superseded entry instead of accumulating one dead
-    trained artifact per rewrite.
-    """
-    return (
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        input_fingerprints(df),
-    )
-
-
-def input_fingerprints(df: DataFrame) -> tuple:
-    """(uri, size, mtime_ns) per input file — the data half of the
-    artifact keys, shared by the session cache above and the disk key
-    in ``artifacts.py``."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = []
-    for uri in sorted(df.inputFiles()):
-        entry: tuple = (uri,)
-        parsed = urlparse(uri)
-        if parsed.scheme in ("file", "") and parsed.path:
-            # A local path containing a literal percent sequence (e.g. a
-            # directory named 'a%20b' that Hadoop did not re-encode) stats
-            # wrong after unquoting — try both forms, first hit wins, so
-            # either encoding keeps the content fingerprint instead of
-            # silently degrading to the plan-keyed fallback.
-            for cand in dict.fromkeys((unquote(parsed.path), parsed.path)):
-                try:
-                    st = os.stat(cand)
-                    entry = (uri, st.st_size, st.st_mtime_ns)
-                    break
-                except OSError:
-                    continue
-        files.append(entry)
-    return tuple(files)
-
-
-def replace_plan_artifact(cache: dict, key: tuple, value) -> None:
-    """Insert a trained artifact, evicting entries for the SAME plan
-    with a different data fingerprint — the superseded artifacts a
-    rewrite leaves behind.  Keeps the cache bounded by live (session,
-    plan) pairs rather than growing per rewrite."""
-    for stale in [k for k in cache if k[:2] == key[:2] and k != key]:
-        del cache[stale]
-    cache[key] = value

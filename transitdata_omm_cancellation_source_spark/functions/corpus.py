@@ -15,19 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import (
-    artifact_cache_key,
-    persist_tracked,
-    register_artifact_frame_cache,
-    replace_plan_artifact,
-)
+from ..artifacts import stored_frame
 from . import text as X
 from .wordhash_kernel import with_word_hashes
-
-#: Session cache for the shared tokenize+hash frame over the RAW
-#: documents table (the dedup family's _FRAME_CACHE discipline);
-#: registered so release_tracked clears it with its data.
-_DOC_WORDS_CACHE: dict[tuple, object] = register_artifact_frame_cache({})
 
 
 def doc_words_frame(t) -> DataFrame:
@@ -54,19 +44,13 @@ def doc_words_frame(t) -> DataFrame:
     space-joined words (== ``polyhash(array_join(ws, ' '))``), computed
     in the same kernel pass for the fingerprint consumer."""
     docs = t["documents"]
-    spark = docs.sparkSession
-    app_id, plan_hash, files = artifact_cache_key(spark, docs)
-    key = (("doc_words", app_id), plan_hash, files)
-    df = _DOC_WORDS_CACHE.get(key)
-    if df is None:
-        df = persist_tracked(
-            with_word_hashes(
-                docs.select("doc_id", X.words("text").alias("ws")),
-                joined_col="jh",
-            )
-        )
-        replace_plan_artifact(_DOC_WORDS_CACHE, key, df)
-    return df
+    return stored_frame(
+        "doc_words",
+        docs,
+        lambda: with_word_hashes(
+            docs.select("doc_id", X.words("text").alias("ws")), joined_col="jh"
+        ),
+    )
 
 
 #: planted sub-shingle-length document: 2 words < the k=3 shingle

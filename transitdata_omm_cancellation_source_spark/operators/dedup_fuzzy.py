@@ -43,68 +43,11 @@ from pyspark.sql import functions as F
 #: initialization).
 _COSINE_TAU = 0.98
 
-from ..caching import (  # noqa: E402
-    artifact_cache_key,
-    persist_tracked,
-    register_artifact_frame_cache,
-    register_value_memo,
-    replace_plan_artifact,
-)
+from ..artifacts import stored_frame, stored_value  # noqa: E402
+from ..caching import persist_tracked  # noqa: E402
 from ..functions import text as X  # noqa: E402
 from ..observability import get_json_logger
 from ..plans.queries import registered_query as _q
-
-#: Session-artifact cache for the family's shared PERSISTED frames
-#: (word hashes, shingle sets, banded candidates, verified pairs) —
-#: the ivf_quantizer/_shared_codebook discipline applied to frames.
-#: Sharing the built DataFrame OBJECT matters as much as sharing the
-#: cached data: re-CONSTRUCTING the 64-minhash/band plan per consumer
-#: measured ~1.7 s of driver-side work (py4j column building +
-#: Catalyst analysis) with the data fully cached.  Keyed content-
-#: sensitively on the documents table; registered so release_tracked
-#: clears it together with the persisted data it points to.
-_FRAME_CACHE: dict[tuple, object] = register_artifact_frame_cache({})
-
-
-def _family_frame(name: str, t, build, *, disk: bool = False, source: str = "documents"):
-    """Build-once, serve-per-session for the family's shared frames.
-
-    ``disk=True`` marks a STANDING INDEX (r14 verdict #1): the frame
-    additionally lives as a parquet artifact on disk
-    (``artifacts.load_or_build_frame``, keyed by source-file
-    fingerprints + the builder's bindings-closure fingerprint), so a
-    FRESH session's first incremental-dedup batch LOADS the corpus
-    index instead of re-paying its build — fresh-session steady state
-    ≈ warm steady state.  Only the true standing indexes carry the
-    flag (the band index, the shingle verification sets, the embedding
-    assignment frame); full-scan intermediates (candidates, verified
-    pairs) remain in-session only — they are query OUTPUT mass, not
-    reusable state.
-    """
-    spark = t[source].sparkSession
-    app_id, plan_hash, files = artifact_cache_key(spark, t[source])
-    # key[:2] is replace_plan_artifact's eviction scope — fold the
-    # artifact name INTO the first element so a rewrite evicts only
-    # THIS artifact for THIS plan, never a different corpus' frames.
-    key = ((name, app_id), plan_hash, files)
-    df = _FRAME_CACHE.get(key)
-    if df is None:
-        # The disk key identifies the corpus by its input-file
-        # fingerprints — a FILELESS source (createDataFrame corpora in
-        # tests, views over literals) has none, so two distinct
-        # synthetic corpora would collide on one digest.  Those build
-        # in-session only (the plan-hash-keyed cache still separates
-        # them).
-        if disk and files:
-            from ..artifacts import load_or_build_frame
-
-            df = persist_tracked(
-                load_or_build_frame(spark, name, t[source], build)
-            )
-        else:
-            df = persist_tracked(build())
-        replace_plan_artifact(_FRAME_CACHE, key, df)
-    return df
 
 P = X.HASH_MOD
 
@@ -201,29 +144,6 @@ _HOT_SHINGLE_LIMIT = int(1 / _HOT_SHINGLE_MASS_FRACTION)
 _HOT_SAMPLE_MOD = 8
 
 
-#: memo for the hot-shingle set and the ngram pass count, keyed by the
-#: corpus' input-file fingerprints (+ the constants that parameterize
-#: each estimate) — the pagerank _PASS_MEMO discipline (r13): both are
-#: PERF choices (the hot set only shapes the candidate-generation
-#: order, the pass count only partitions the candidate space; exact
-#: verification makes results identical either way), so serving them
-#: from the memo on a repeated build skips three small driver jobs
-#: per build without any correctness surface.  Fileless (in-memory)
-#: corpora have no fingerprints and simply re-estimate.  Registered
-#: under the ``caching.register_value_memo`` survive-release contract
-#: (r16): it holds derived plan parameters, not executor memory.
-_ESTIMATE_MEMO: dict = register_value_memo({})
-
-
-def _estimate_memo_key(df: DataFrame, *extra):
-    from ..caching import input_fingerprints
-
-    fps = input_fingerprints(df)
-    if not fps:
-        return None
-    return (repr(fps), *extra)
-
-
 def _hot_shingles(sh: DataFrame) -> list[int]:
     """Heavy-hitter shingles, collected under an explicit driver bound.
 
@@ -244,36 +164,32 @@ def _hot_shingles(sh: DataFrame) -> list[int]:
     The hot set is ordered (df DESC, shingle) before the limit, so
     even a limit that fired (impossible by pigeonhole) would keep the
     HOTTEST shingles and stay deterministic, never
-    partition-order-dependent.
+    partition-order-dependent.  A stored value of ``sh``: a repeated
+    build runs none of these jobs.
     """
-    memo_key = _estimate_memo_key(
-        sh,
-        "hot",
-        _HOT_SAMPLE_MOD,
-        _HOT_SHINGLE_MASS_FRACTION,
-        _HOT_SHINGLE_LIMIT,
-    )
-    if memo_key is not None and memo_key in _ESTIMATE_MEMO:
-        return _ESTIMATE_MEMO[memo_key]
-    sample = sh.filter(F.col("doc_id") % _HOT_SAMPLE_MOD == 0)
-    total_mass = sample.agg(F.sum(F.size("shingles"))).first()[0] or 0
-    cap = max(1000 // _HOT_SAMPLE_MOD, int(total_mass * _HOT_SHINGLE_MASS_FRACTION))
-    freq = (
-        sample.select(F.explode("shingles").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    hot = [
-        r[0]
-        for r in freq.filter(F.col("df") > cap)
-        .orderBy(F.col("df").desc(), F.col("shingle").asc())
-        .limit(_HOT_SHINGLE_LIMIT)
-        .collect()
-    ]
-    assert len(hot) <= _HOT_SHINGLE_LIMIT
-    if memo_key is not None:
-        _ESTIMATE_MEMO[memo_key] = hot
-    return hot
+
+    def compute() -> list[int]:
+        sample = sh.filter(F.col("doc_id") % _HOT_SAMPLE_MOD == 0)
+        total_mass = sample.agg(F.sum(F.size("shingles"))).first()[0] or 0
+        cap = max(
+            1000 // _HOT_SAMPLE_MOD, int(total_mass * _HOT_SHINGLE_MASS_FRACTION)
+        )
+        freq = (
+            sample.select(F.explode("shingles").alias("shingle"))
+            .groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+        )
+        hot = [
+            r[0]
+            for r in freq.filter(F.col("df") > cap)
+            .orderBy(F.col("df").desc(), F.col("shingle").asc())
+            .limit(_HOT_SHINGLE_LIMIT)
+            .collect()
+        ]
+        assert len(hot) <= _HOT_SHINGLE_LIMIT
+        return hot
+
+    return stored_value("hot_shingles", sh, compute)
 
 
 @_q(
@@ -523,28 +439,24 @@ def _ngram_pass_count(spark, sh: DataFrame) -> int:
     # floor at one byte so a sub-1e-9 GiB budget degrades to
     # max-passes, never a divide-by-zero.
     budget_bytes = max(1, int(budget_gb * 2**30))
-    memo_key = _estimate_memo_key(
-        sh, "ngram_passes", budget_bytes, _JACCARD_TAU
-    )
-    if memo_key is not None and memo_key in _ESTIMATE_MEMO:
-        return _ESTIMATE_MEMO[memo_key]
-    prefix_rows = (
-        sh.agg(
-            F.sum(
-                (
-                    F.size("shingles")
-                    - F.ceil(F.size("shingles") * F.lit(_JACCARD_TAU))
-                    + 1
-                ).cast("long")
-            )
-        ).first()[0]
-        or 0
-    )
-    est = prefix_rows * _NGRAM_SPILL_BYTES_PER_PREFIX_ROW
-    passes = max(1, -(-int(est) // budget_bytes))
-    if memo_key is not None:
-        _ESTIMATE_MEMO[memo_key] = passes
-    return passes
+
+    def estimate() -> int:
+        prefix_rows = (
+            sh.agg(
+                F.sum(
+                    (
+                        F.size("shingles")
+                        - F.ceil(F.size("shingles") * F.lit(_JACCARD_TAU))
+                        + 1
+                    ).cast("long")
+                )
+            ).first()[0]
+            or 0
+        )
+        est = prefix_rows * _NGRAM_SPILL_BYTES_PER_PREFIX_ROW
+        return max(1, -(-int(est) // budget_bytes))
+
+    return stored_value("ngram_passes", sh, estimate, budget_bytes)
 
 
 def _release_pass_scratch(spark) -> None:
@@ -624,9 +536,9 @@ def _word_hash_frame(t) -> DataFrame:
     are ``shingles_from_word_hashes`` (which widens each element to
     BIGINT before its multiply) and the SimHash kernel (numpy int64
     re-cast)."""
-    return _family_frame(
+    return stored_frame(
         "word_hashes",
-        t,
+        t["documents"],
         lambda: _wh_of(planted_corpus(t["documents"])),
     )
 
@@ -646,9 +558,9 @@ def _minhash_shingles(t) -> DataFrame:
     to int64 inside an Arrow kernel before doing arithmetic; nothing
     multiplies the INT column in Spark SQL, so no 32-bit wrap is
     reachable."""
-    return _family_frame(
+    return stored_frame(
         "shingle_sets",
-        t,
+        t["documents"],
         lambda: _shingles_of(_word_hash_frame(t)),
         disk=True,
     )
@@ -673,7 +585,9 @@ def _band_candidates(t) -> DataFrame:
     pairs never verify).  Oracles are unchanged — values identical.
     Shared by the Jaccard-verified and edit-distance-verified dedup
     queries — one built frame, one cached compute."""
-    return _family_frame("band_candidates", t, lambda: _build_band_candidates(t))
+    return stored_frame(
+        "band_candidates", t["documents"], lambda: _build_band_candidates(t)
+    )
 
 
 def _build_band_candidates(t) -> DataFrame:
@@ -794,7 +708,7 @@ def _minhash_lsh(spark, t):
             .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
         )
 
-    return _family_frame("minhash_verified_pairs", t, build)
+    return stored_frame("minhash_verified_pairs", t["documents"], build)
 
 
 # --- incremental (delta-batch) dedup ----------------------------------------
@@ -844,7 +758,7 @@ def _delta_batch(spark, t):
     per batch is the thing that doesn't scale.
 
     Engine shape: the corpus's (doc_id, band_key) index and shingle
-    sets are STANDING artifacts (``_family_frame`` in-session; at
+    sets are STANDING artifacts (``stored_frame(disk=True)``; at
     production scale the same frames live as parquet tables bucketed
     by band_key).  A batch query then pays:
 
@@ -886,8 +800,11 @@ def delta_batch_pairs(t, batch_pred) -> DataFrame:
     in a fresh session) and the candidate join's batch side stays
     batch-sized."""
     sh = _minhash_shingles(t)
-    bands = _family_frame(
-        "band_frame", t, lambda: _band_keys_frame(_minhash_shingles(t)), disk=True
+    bands = stored_frame(
+        "band_frame",
+        t["documents"],
+        lambda: _band_keys_frame(_minhash_shingles(t)),
+        disk=True,
     )
     delta_b = bands.filter(batch_pred)
     corpus_b = bands.filter(~batch_pred)
@@ -1309,11 +1226,9 @@ def _cosine_vb(spark, t) -> DataFrame:
     occupancy count and both run-scan sides); the delta-batch query
     treats it as the persisted index a new batch probes.
 
-    STANDING INDEX (r14 verdict #1): disk-backed via ``_family_frame
-    (disk=True)`` so a fresh session's delta batch loads the
-    assignment instead of re-running quantize+assign over the corpus;
-    the helpers are closed over (freevars) so their bodies fold into
-    the disk key — an assignment-recipe edit is a cache miss."""
+    STANDING INDEX: a disk-backed stored frame, so a fresh session's
+    delta batch loads the assignment instead of re-running
+    quantize+assign over the corpus."""
     from .pairscan import micro_unit_col
     from .similarity import assign_to_centroids, ivf_quantizer
 
@@ -1336,7 +1251,7 @@ def _cosine_vb(spark, t) -> DataFrame:
             assign_to_centroids(vecs, ivf_quantizer(spark, t)), "vec_id"
         ).select("vec_id", micro_unit_col("v").alias("uv"), "label", "cell")
 
-    return _family_frame("cosine_vb", t, build, disk=True, source="embeddings")
+    return stored_frame("cosine_vb", t["embeddings"], build, disk=True)
 
 
 def _embedding_oracle() -> str:

@@ -81,8 +81,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..artifacts import stored_value
 from ..caching import persist_tracked
-from ..caching import register_value_memo as _register_value_memo
 from ..plans.queries import registered_query as _q
 
 #: fixed power-iteration rounds and damping (85/100 as integers).
@@ -157,14 +157,6 @@ def _guard_rank_broadcast(spark, n_nodes: int) -> None:
         )
 
 
-#: pass-count memo keyed by (input fingerprints, budget conf) — the
-#: estimator is one aggregate over the items frame, which is exactly
-#: the cost a repeated bench pass or a multi-query session should not
-#: re-pay; the fingerprint key means a REGENERATED fact table still
-#: re-estimates.
-_PASS_MEMO: dict = _register_value_memo({})
-
-
 def _forced_passes(spark) -> int:
     try:
         return int(spark.conf.get(_PR_PASSES_CONF, "0"))
@@ -189,70 +181,39 @@ def _scratch_budget_bytes(spark) -> int:
     return max(1, int(budget_gb * 2**30))
 
 
-def _pass_memo_key(spark, items):
-    """Memo key for the pass estimate, or None for in-memory frames:
-    those have no input files, and an empty fingerprint would alias
-    EVERY such frame onto one memo slot, so they simply re-estimate (a
-    pass count is a perf choice, never a correctness one, but a
-    silently shared one is confusing)."""
-    from ..caching import input_fingerprints
-
-    fps = input_fingerprints(items)
-    if not fps:
-        return None
-    return (
-        repr(fps),
-        spark.conf.get(_PR_SCRATCH_GB_CONF, str(_PR_SCRATCH_GB_DEFAULT)),
-    )
-
-
-def _known_pass_count(spark, items):
-    """Pass count with NO Spark job — forced conf or memo hit — else
-    None.  Checked before the persist-placement proxy so repeated
-    builds (bench passes, multi-query sessions) skip the proxy's fact
-    count entirely (r13 ADVICE)."""
+def _pagerank_pass_count(spark, frame, on_miss=None) -> int:
+    """ceil(estimated pair-fan-out bytes / budget): the forced conf,
+    else ONE cheap aggregate stored per (frame, budget), so repeated
+    builds (bench passes, multi-query sessions) run no job for it.
+    Accepts either grain — the item-level (l_orderkey, l_partkey)
+    frame (countDistinct per order, so raw fact rows estimate the same
+    as a distinct'd frame) or the per-order ``ps`` array frame the
+    edge build aggregates first (size(ps) is the degree directly).
+    ``on_miss`` runs before the estimate, only when it runs.  Returns
+    1 below the budget — the certified byte-identical plan."""
     forced = _forced_passes(spark)
     if forced > 0:
         return forced
-    memo_key = _pass_memo_key(spark, items)
-    if memo_key is not None:
-        return _PASS_MEMO.get(memo_key)
-    return None
-
-
-def _pagerank_pass_count(spark, frame) -> int:
-    """ceil(estimated pair-fan-out bytes / budget), the estimate ONE
-    cheap aggregate, memoized per (input files, budget).  Accepts
-    either grain — the item-level (l_orderkey, l_partkey) frame
-    (countDistinct per order, so raw fact rows estimate the same as a
-    distinct'd frame) or the per-order ``ps`` array frame the r15
-    edge build aggregates first (size(ps) is the degree directly, and
-    running the estimate over the PERSISTED array frame fills the
-    cache the build's passes reuse).  Both spellings share one memo
-    key: the input fingerprints are the source parquet files, which
-    are identical for both frames.  Returns 1 below the budget — the
-    certified byte-identical plan."""
-    known = _known_pass_count(spark, frame)
-    if known is not None:
-        return known
-    memo_key = _pass_memo_key(spark, frame)
     budget_bytes = _scratch_budget_bytes(spark)
-    if "ps" in frame.columns:
-        degrees = frame.select(F.size("ps").alias("d"))
-    else:
-        degrees = frame.groupBy("l_orderkey").agg(
-            F.countDistinct("l_partkey").alias("d")
+
+    def estimate() -> int:
+        if on_miss is not None:
+            on_miss()
+        if "ps" in frame.columns:
+            degrees = frame.select(F.size("ps").alias("d"))
+        else:
+            degrees = frame.groupBy("l_orderkey").agg(
+                F.countDistinct("l_partkey").alias("d")
+            )
+        pair_rows = (
+            degrees.agg(F.sum(F.expr("d * (d - 1) div 2")).cast("long"))
+            .first()[0]
+            or 0
         )
-    pair_rows = (
-        degrees.agg(F.sum(F.expr("d * (d - 1) div 2")).cast("long"))
-        .first()[0]
-        or 0
-    )
-    est = pair_rows * _PR_SPILL_BYTES_PER_PAIR
-    passes = max(1, -(-int(est) // budget_bytes))
-    if memo_key is not None:
-        _PASS_MEMO[memo_key] = passes
-    return passes
+        est = pair_rows * _PR_SPILL_BYTES_PER_PAIR
+        return max(1, -(-int(est) // budget_bytes))
+
+    return stored_value("pagerank_passes", frame, estimate, budget_bytes)
 
 
 def _pagerank_scratch_dir(spark, token: str) -> str:
@@ -367,27 +328,21 @@ def _pagerank(spark, t):
     # and a wrong proxy costs one persist (released below) or one
     # extra scan, never correctness.  Below the proxy threshold
     # nothing is persisted and the certified plan is untouched.  When
-    # the pass count is already KNOWN without a job (forced conf or a
-    # memo hit from an earlier build this session) the proxy never
-    # runs — the r13 ADVICE caught repeated bench passes paying the
-    # fact count the memo existed to avoid.
-    known = _known_pass_count(spark, items)
-    if known is not None:
-        likely_scratch = known > 1
-    else:
-        likely_scratch = (
+    # the pass count is already known without a job (forced conf or a
+    # stored value from an earlier build) the proxy never runs.
+    placed = []
+
+    def place_persist() -> None:
+        if (
             t["lineitem"].count() * _PR_SPILL_BYTES_PER_PAIR
             > _scratch_budget_bytes(spark)
-        )
-    po_p = persist_tracked(po) if likely_scratch else None
-    if po_p is not None:
-        po = po_p
-    passes = (
-        known if known is not None else _pagerank_pass_count(spark, po)
-    )
+        ):
+            placed.append(persist_tracked(po))
+
+    passes = _pagerank_pass_count(spark, po, place_persist)
     scratch = passes > 1
-    if po_p is not None and not scratch:
-        po_p.unpersist()  # the proxy overshot; restore idle state
+    if placed and not scratch:
+        po.unpersist()  # the proxy overshot; restore idle state
     # An exception mid-build (a pass write, a superstep) must not
     # leak tens of GB of pass parquet — the very disk pressure
     # scratch mode exists to relieve (r13 ADVICE): the finally
@@ -450,9 +405,9 @@ def _pagerank(spark, t):
             # already persisted by the proxy above, in which case the
             # estimator has materialized it); released as soon as the
             # edge table is written.
-            if po_p is None:
-                po_p = persist_tracked(po)
-            pairs = _half_pairs(po_p)
+            if not placed:
+                persist_tracked(po)
+            pairs = _half_pairs(po)
             for k in range(passes):
                 _half_weights(
                     pairs.filter(F.pmod(F.col("dst"), F.lit(passes)) == k)
@@ -460,7 +415,7 @@ def _pagerank(spark, t):
                     os.path.join(scratch_root, f"pass{k}")
                 )
                 _release_pass_scratch(spark)
-            po_p.unpersist()
+            po.unpersist()
             half = spark.read.parquet(
                 *[os.path.join(scratch_root, f"pass{k}") for k in range(passes)]
             ).select("src", "dst", "w")

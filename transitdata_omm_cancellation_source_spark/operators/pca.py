@@ -65,7 +65,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..caching import register_value_memo as _register_value_memo
+from ..artifacts import stored_value
 from ..functions.hyperplane import DIM
 from ..observability import get_json_logger
 from ..plans.queries import registered_query as _q
@@ -210,25 +210,18 @@ _U_PRODUCT_BOUND = 3_037_000_499
 #: raising below the true edge with a 2^12 double-ULP margin.
 _U_QUANTIZE_BOUND = 2**63 - 2**12
 
-#: cached per-(session, corpus-plan) max|u| — one cheap aggregate,
-#: the corpus_count caching discipline (similarity._COUNT_CACHE).
-_MAXU_CACHE: dict[tuple, int] = _register_value_memo({})
-
 
 def corpus_max_abs_u(spark, emb) -> int:
-    """Max micro-unit coordinate magnitude over the corpus (cached per
-    session/plan) — selects the moment-product path and guards the
+    """Max micro-unit coordinate magnitude over the corpus (a stored
+    value) — selects the moment-product path and guards the
     quantization ceiling.  Computed in DOUBLE *without* the BIGINT
     cast: the cast saturates silently past 2^63 with ANSI off, which
     would hide exactly the overflow this aggregate exists to catch.
     Exact to 2^53 and monotone beyond — more than enough to compare
     against the 3e9 path-selection bound and the ~9.2e18 quantize
     ceiling."""
-    from ..caching import artifact_cache_key, replace_plan_artifact
 
-    key = artifact_cache_key(spark, emb)
-    m = _MAXU_CACHE.get(key)
-    if m is None:
+    def compute() -> int:
         m = emb.select(
             F.max(
                 F.expr(
@@ -237,9 +230,9 @@ def corpus_max_abs_u(spark, emb) -> int:
                 )
             )
         ).collect()[0][0]
-        m = int(m) if m is not None else 0
-        replace_plan_artifact(_MAXU_CACHE, key, m)
-    return m
+        return int(m) if m is not None else 0
+
+    return stored_value("max_abs_u", emb, compute)
 
 
 def _moment_rows(spark, emb, wide_products: bool):

@@ -35,12 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import (
-    artifact_cache_key,
-    persist_tracked,
-    replace_plan_artifact,
-)
-from ..caching import register_value_memo as _register_value_memo
+from ..artifacts import stored_rows, stored_value
+from ..caching import persist_tracked
 from ..functions.hyperplane import (  # registry-free shared primitives
     DIM,
     DOT_D as _DOT_D,
@@ -71,35 +67,15 @@ QUERY_CAP = QUERY_MOD * 32
 #: vectors — beyond that, raise alongside a cell-parallel assignment.
 IVF_MAX_BITS = 12
 
-#: Cached corpus counts, keyed by (applicationId, corpus plan) like the
-#: other session artifacts: the coarse-quantizer width is a function of
-#: ONE cheap metadata-driven count per (session, corpus), not one per
-#: query build.
-_COUNT_CACHE: dict[tuple, int] = _register_value_memo({})
-
-#: Trained coarse-quantizer artifact cache, keyed by (applicationId,
-#: corpus plan) — the same session-artifact discipline as the PQ
-#: codebook (operators/pq.py _CODEBOOK_CACHE): the quantizer is a
-#: bounded ≤ 2^IVF_MAX_BITS-row table at ANY corpus scale, so its
-#: consumers start from a literal local relation instead of embedding
-#: the training fold subtree in every plan.  Served by
-#: ``ivf_quantizer`` below.
-_CENTROID_ARTIFACT_CACHE: dict[tuple, DataFrame] = _register_value_memo({})
-
 
 def corpus_count(spark, emb: DataFrame) -> int:
-    """Corpus cardinality for quantizer sizing (cached per session/plan).
+    """Corpus cardinality for quantizer sizing (a stored value).
 
     Makes every consumer CONTRACTUALLY EAGER on first use (see
     plans/queries.py QuerySpec): parquet count(*) is satisfied from
     row-group metadata, so this stays cheap at any corpus size.
     """
-    key = artifact_cache_key(spark, emb)
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        n = emb.count()
-        replace_plan_artifact(_COUNT_CACHE, key, n)
-    return n
+    return stored_value("corpus_count", emb, emb.count)
 
 
 def lsh_nbuckets(spark, t) -> int:
@@ -743,42 +719,29 @@ def ivf_quantizer(spark, t) -> DataFrame:
     ``knn_ivf_kmeans``, the IVF-PQ composition, and SemDeDup — so the
     cluster geometry can never drift between search and dedup.  The
     table is ≤ 2^IVF_MAX_BITS rows (bounded at any corpus size), so it
-    follows the PQ-codebook artifact discipline: first use per
-    (session, corpus plan) trains and collects; later uses replay the
-    local relation (CONTRACTUALLY EAGER, see plans/queries.py
-    QuerySpec).  Since r12 the artifact also persists to disk under
-    the warehouse dir (``artifacts.load_or_train``): a fresh session
-    LOADS instead of retraining — the production train-once/serve-many
-    shape, and the fix for the r11 decade table charging one session's
-    first kernel-scan query the whole training bill.
+    is stored as trained rows (``artifacts.stored_rows``): first use
+    trains and collects, later uses replay the local relation, and a
+    fresh session loads it from disk (CONTRACTUALLY EAGER, see
+    plans/queries.py QuerySpec).
     """
     emb = t["embeddings"]
-    key = artifact_cache_key(spark, emb)
-    cached = _CENTROID_ARTIFACT_CACHE.get(key)
-    if cached is None:
-        from ..artifacts import load_or_train
 
-        def train():
-            k = _ivf_ncells(spark, t)
-            seeded = emb.select(
-                "vec_id",
-                "embedding",
-                (F.col("vec_id") % k).cast("int").alias("scell"),
-            )
-            return centroid_vectors(
-                _fold_centroids(seeded, key="scell"), "scell"
-            )
-
-        cached = load_or_train(
-            spark,
-            "ivf_quantizer",
-            emb,
-            "c_key int, cv array<double>, cn2 double",
-            train,
-            ["c_key"],
+    def train():
+        k = _ivf_ncells(spark, t)
+        seeded = emb.select(
+            "vec_id",
+            "embedding",
+            (F.col("vec_id") % k).cast("int").alias("scell"),
         )
-        replace_plan_artifact(_CENTROID_ARTIFACT_CACHE, key, cached)
-    return cached
+        return centroid_vectors(_fold_centroids(seeded, key="scell"), "scell")
+
+    return stored_rows(
+        "ivf_quantizer",
+        emb,
+        train,
+        "c_key int, cv array<double>, cn2 double",
+        ["c_key"],
+    )
 
 
 def ivf_cells(spark, t) -> DataFrame:

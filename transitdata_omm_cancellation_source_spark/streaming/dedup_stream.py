@@ -20,7 +20,7 @@ end-to-end through a readStream:
   (``tests/test_dedup_stream.py`` replays a committed batch through
   Spark's offset log to pin exactly this).  At production scale these
   dirs are the band-index partitions of the standing corpus artifact
-  (``artifacts.load_or_build_frame``) and a compaction job folds them
+  (``artifacts.stored_frame(disk=True)``) and a compaction job folds them
   in; the per-batch layout here IS the streaming-state append form of
   that table.
 - **emission**: per micro-batch, candidates = (new bands x seen
